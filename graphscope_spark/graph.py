@@ -29,6 +29,8 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphscope_spark.superstep import stats_barrier
+
 SRC, DST, VID = "src", "dst", "vid"
 
 
@@ -42,45 +44,39 @@ def build_vertex_ids(
     (performance_tuning.md:20-41).
 
     Scalable dense-rank assignment WITHOUT a single-partition window:
-    range-partition the distinct keys, sort within partitions, then
-    vid = per-partition row_number + exclusive prefix-sum of partition
-    sizes (a tiny broadcast).  The result is invariant to the sampled
+    range-partition the distinct keys into ``num_partitions``, sort
+    within partitions and materialize them once (``stats_barrier``),
+    then vid = row index within the partition + exclusive prefix-sum of
+    the partition sizes.  The sizes are one tiny collect; the offsets go
+    back as a literal map, so no Python-worker job and no shuffle runs
+    after the materialization.  The result is invariant to the sampled
     range boundaries — vid is always the global rank — so ids are
     deterministic across runs and parallelism levels.  One sort shuffle,
     paid once per graph load; dense longs keep every superstep's state
     narrow (vs shuffling url strings ~60B each).
-    """
-    from pyspark.sql.window import Window
 
-    keys = (
+    The materialized keys live in the block store, not in the cache
+    manager: a later call on the same input recomputes them, and their
+    blocks go with the last DataFrame that reads them.
+    """
+    keys = stats_barrier(
         df.select(F.col(key))
         .distinct()
         .repartitionByRange(num_partitions, F.col(key))
-        .withColumn("_pid", F.spark_partition_id())
-    ).cache()  # pin the sampled range boundaries: the offsets collected
-    # below must describe the SAME partitioning the final job reads
-    sizes = keys.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    offset = {}
-    acc = 0
-    for r in sorted(sizes, key=lambda r: r["_pid"]):
-        offset[r["_pid"]] = acc
-        acc += r["n"]
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(p, o) for p, o in offset.items()], "_pid int, _off long"
-        )
+        .sortWithinPartitions(key)
     )
-    w = Window.partitionBy("_pid").orderBy(F.col(key))
-    return (
-        keys.join(off_df, "_pid")
-        .select(
-            (F.row_number().over(w) - F.lit(1) + F.col("_off"))
-            .cast("long")
-            .alias(out),
-            F.col(key),
-        )
-    )
+    # monotonically_increasing_id = (partition id << 33) + row number;
+    # both are evaluated straight over the materialized partitions, so
+    # the partition id is the range partition and rows follow the sort
+    pid = F.spark_partition_id()
+    row = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    sizes = sorted(keys.groupBy(pid.alias("_pid")).count().collect())
+    offsets, acc = [], 0
+    for p, n in sizes:
+        offsets += [F.lit(p), F.lit(acc).cast("long")]
+        acc += n
+    off = F.create_map(*offsets)[pid] if offsets else F.lit(0)
+    return keys.select((off + row).cast("long").alias(out), F.col(key))
 
 
 @dataclass(frozen=True)

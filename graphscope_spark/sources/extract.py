@@ -10,18 +10,21 @@ Extraction grammar (deterministic, matching the generator's renderer):
     text  = title ++ "\\n" ++ "\\n"-joined <p> bodies
     links = href values of <a> anchors, document order
 
-Both UDFs are Arrow-batched (``pandas_udf``): the regex work happens
+The UDFs are Arrow-batched (``pandas_udf``): the regex work happens
 per batch on pandas Series, never row-at-a-time through Py4J.  At 100TB
 the html column dominates I/O — callers should select only (url, html)
-before applying these so parquet column pruning drops text/lang.
+before applying these so parquet column pruning drops text/lang, and
+each page must go through a UDF only once.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
@@ -32,7 +35,38 @@ _HREF = re.compile(r'<a\s+href="([^"]+)"')
 _ANCHOR = re.compile(r'<a\s+href="([^"]+)"\s*>(.*?)</a>', re.S)
 
 
-@pandas_udf(StringType())
+class _ContextBoundUDF:
+    """A module-level ``pandas_udf`` rebuilt for each SparkContext.
+
+    A pandas UDF binds its JVM function, and with it the Python
+    accumulator, to the context that first calls it.  After
+    ``spark.stop()`` and a new session in the same process, every task
+    using the old binding fails to report its accumulator update
+    ("Failed to update accumulator 0 ... Broken pipe").  Calling this
+    object returns the column of a UDF built for the active context.
+    """
+
+    def __init__(self, fn, return_type):
+        functools.update_wrapper(self, fn)
+        self.func, self.returnType = fn, return_type
+        # one attribute, so a concurrent caller never pairs a context
+        # with another context's UDF
+        self._bound = (None, None)
+
+    def __call__(self, *cols) -> Column:
+        sc = SparkContext._active_spark_context
+        bound_sc, udf = self._bound
+        if udf is None or bound_sc is not sc:
+            udf = pandas_udf(self.func, self.returnType)
+            self._bound = (sc, udf)
+        return udf(*cols)
+
+
+def _context_bound_udf(return_type):
+    return lambda fn: _ContextBoundUDF(fn, return_type)
+
+
+@_context_bound_udf(StringType())
 def extract_text(html: pd.Series) -> pd.Series:
     """html binary → text (title + paragraphs, newline-joined)."""
 
@@ -44,7 +78,7 @@ def extract_text(html: pd.Series) -> pd.Series:
     return html.map(one)
 
 
-@pandas_udf(ArrayType(StringType()))
+@_context_bound_udf(ArrayType(StringType()))
 def extract_links(html: pd.Series) -> pd.Series:
     """html binary → array of href targets (document order)."""
 
@@ -55,7 +89,7 @@ def extract_links(html: pd.Series) -> pd.Series:
     return html.map(one)
 
 
-@pandas_udf(ArrayType(StructType([
+@_context_bound_udf(ArrayType(StructType([
     StructField("href", StringType()),
     StructField("anchor", StringType()),
 ])))
@@ -79,22 +113,29 @@ def anchor_texts(pages: DataFrame) -> DataFrame:
     aggregation by dst_url, so the anchor-profile shuffle is the only
     exchange after extraction.
     """
-    return pages.select(
-        F.col("url").alias("src_url"),
-        extract_anchor_pairs("html").alias("pairs"),
-    ).select(
-        "src_url",
-        F.explode("pairs").alias("p"),
-    ).select("src_url", F.col("p.href").alias("dst_url"), F.col("p.anchor").alias("anchor"))
+    return (
+        pages.select(
+            F.col("url").alias("src_url"),
+            extract_anchor_pairs("html").alias("pairs"),
+        )
+        # explode_outer: under a plain explode Catalyst re-runs the UDF in a size() > 0 filter
+        .select("src_url", F.explode_outer("pairs").alias("p"))
+        .where(F.col("p").isNotNull())
+        .select("src_url", F.col("p.href").alias("dst_url"), F.col("p.anchor").alias("anchor"))
+    )
 
 
 def links_from_pages(pages: DataFrame) -> DataFrame:
     """(src_url, dst_url) link set, deduplicated.
 
-    Column-pruned: only (url, html) are read from the scan.
+    Column-pruned: only (url, html) are read from the scan, and the UDF
+    runs once per page.  Lazy: callers that read the links more than once
+    materialize them (``graph_from_pages`` does).
     """
     return (
         pages.select(F.col("url").alias("src_url"), extract_links("html").alias("hrefs"))
-        .select("src_url", F.explode("hrefs").alias("dst_url"))
+        # explode_outer: under a plain explode Catalyst re-runs the UDF in a size() > 0 filter
+        .select("src_url", F.explode_outer("hrefs").alias("dst_url"))
+        .where(F.col("dst_url").isNotNull())
         .distinct()
     )

@@ -5,7 +5,8 @@ refactor that silently breaks pruning/pushdown fails a test rather
 than a production run:
 
 - the link-extraction path must prune the pages scan to (url, html) —
-  at 10^12 pages the text/lang columns are dead weight;
+  at 10^12 pages the text/lang columns are dead weight — and evaluate
+  its UDF once per page;
 - a vertex-id filter must be pushed into the parquet scan;
 - the PageRank gather must keep a partial (map-side) aggregation.
 """
@@ -35,6 +36,17 @@ def test_link_extraction_prunes_to_url_html(spark, pages_parquet):
     assert scan_lines, plan
     for l in scan_lines:
         assert "text" not in l and "lang" not in l, l
+
+
+def test_link_extraction_evaluates_udf_once(spark, pages_parquet):
+    """A plain explode makes Catalyst add size(udf(html)) > 0 under the
+    Generate — a second ArrowEvalPython over every page."""
+    from graphscope_spark.sources.extract import anchor_texts, links_from_pages
+
+    pages = spark.read.parquet(pages_parquet)
+    for df in (links_from_pages(pages), anchor_texts(pages)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_filter_pushdown_into_scan(spark, pages_parquet):
