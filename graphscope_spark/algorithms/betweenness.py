@@ -30,11 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphscope_spark.superstep import (
-    columnar_barrier,
-    stats_barrier,
-    unpersist_barrier,
-)
+from graphscope_spark.superstep import stats_barrier, unpersist_barrier
 from graphscope_spark.graph import DST, SRC, VID, Graph
 from graphscope_spark.algorithms.multisource import _collect_roots
 

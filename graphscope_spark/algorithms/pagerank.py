@@ -10,32 +10,34 @@ Reference semantics (apps/pagerank/pagerank_networkx.h:54-163):
 Python binding defaults alpha=0.85, max_iter=100, tol=1e-6
 (python/graphscope/analytical/app/pagerank.py:91-121).  The LDBC
 fixed-round form (grape::PageRankOpt, .gs_conf.yaml:2-9) is the same
-recurrence with tol=None and max_iter=max_round.
+recurrence with tol=None and max_iter=max_round.  Personalized
+PageRank is the same superstep with the uniform 1/N teleport vector
+replaced by one concentrated on a source set (``_power_iteration``).
 
-Spark plan per superstep (one job, ONE shuffle):
-    scatter: edges ⋈ state on src — ShuffledHashJoin with ZERO exchanges:
-             edges are cached hash(src, P); the state DataFrame is
-             hash(vid, P) (init repartitions once, and every round's
-             output inherits hash(vid) from the gather), so both sides
-             are already co-partitioned.
-    gather:  groupBy(dst).sum(rank/out_deg) — THE per-round shuffle
-             (|E| message rows); map-side partial aggregation collapses
-             hub keys before the exchange, which is also the skew story.
-    apply:   state ⋈ contribs on vid — again co-partitioned, no exchange.
+Spark plan per superstep:
+    scatter: edges ⋈ state on src — ShuffledHashJoin; edges are cached
+             hash(src, P), or the packed adjacency (skew.packed_msgs)
+             probes one row per source and explodes the messages.
+    gather:  groupBy(dst).sum(rank/out_deg) — the message shuffle
+             (|E| rows); map-side partial aggregation collapses hub
+             keys before the exchange, which is also the skew story.
+    apply:   state ⋈ contribs on vid — ShuffledHashJoin.
     all-reduce: lazy 1-row aggregate broadcast into the apply step.
 
-Two ingredients make the one-shuffle plan real (verified with
-.explain("formatted") at 4M vertices / 13M edges: the round plan shows
-exactly one Exchange and no Sort):
+What the plan holds (pinned by tests/test_plans.py): every round after
+the first plans THREE shuffle Exchanges and no Sort — the message
+groupBy, plus the state re-exchanged by hash(vid) into both joins,
+because the round barrier (superstep.stats_barrier / columnar_barrier)
+rebuilds the state as a LogicalRDD with unknown partitioning.  The
+packed gather adds one Generate and no Exchange.  Two settings keep it
+there:
 - `hint("shuffle_hash")` on the state side of both joins — otherwise
-  Catalyst picks SortMergeJoin and re-SORTS the 13M-row cached edge
-  table every round;
-- AQE is toggled OFF for the duration of the loop (restored after) —
-  under AQE a localCheckpoint's LogicalRDD reports UnknownPartitioning,
-  so every round would re-exchange the state on both joins.  AQE's
-  skew-join is not needed here: the only shuffle is an aggregation,
-  already skew-resistant via partial aggregation (plus the optional
-  explicit hub salting below).
+  Catalyst picks SortMergeJoin and re-SORTS the cached edge table every
+  round;
+- AQE is toggled OFF for the duration of the loop (restored after,
+  superstep.one_shuffle_mode).  AQE's skew-join is not needed here: the
+  heavy shuffle is an aggregation, already skew-resistant via partial
+  aggregation (plus the optional explicit hub salting below).
 """
 
 from __future__ import annotations
@@ -44,6 +46,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import DST, SRC, VID, Graph
+from graphscope_spark.skew import (
+    auto_adjacency, hot_keys, packed_adjacency, packed_msgs, salted_sum,
+)
 from graphscope_spark.superstep import StepResult, SuperstepRunner, one_shuffle_mode
 
 
@@ -87,9 +92,40 @@ def pagerank(
     unchanged.  Falls back to the edge-table join for weighted runs.
     """
     spark: SparkSession = g.edges.sparkSession
+    run = runner or SuperstepRunner(
+        spark, "pagerank", checkpoint_dir=checkpoint_dir, resume=resume
+    )
+    return _power_iteration(
+        g, None, alpha, max_iter, tol, run, sync_every, adjacency,
+        weight=weight, salt_hot_threshold=salt_hot_threshold, salt_n=salt_n,
+    )
+
+
+def _power_iteration(
+    g: Graph,
+    sources: DataFrame | None,
+    alpha: float,
+    max_iter: int,
+    tol: float | None,
+    run: SuperstepRunner,
+    sync_every: int,
+    adjacency: bool | None,
+    weight: str | None = None,
+    salt_hot_threshold: int | None = None,
+    salt_n: int = 16,
+) -> DataFrame:
+    """The one PageRank superstep loop.  ``sources=None`` teleports
+    uniformly (1/N per vertex); otherwise the teleport vector — carried
+    in the state as column ``tele`` — is uniform over the first column
+    of ``sources``, and dangling mass follows it."""
+    spark: SparkSession = g.edges.sparkSession
     # P must be one value everywhere: edge cache, state, and the gather
-    # shuffle — co-partitioning is what removes the join exchanges.
+    # shuffle — co-partitioning keeps the cached edge side of the
+    # scatter join free of exchanges.
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = g.num_vertices()
+    if n == 0:
+        return g.vertices.select(VID, F.lit(0.0).alias("rank"))
     if weight is None:
         edges = (g.edges if g.directed else g.symmetrized()).select(SRC, DST)
     elif g.directed:
@@ -112,25 +148,17 @@ def pagerank(
         )
     if g.num_partitions != p:
         edges = edges.repartition(p, SRC)
-    from graphscope_spark.skew import auto_adjacency
-
     # size-resolved default (scripts/adj_ab_r5.jsonl + r4
     # pr_tune_r4_adj.jsonl): packed wins ~2x at 16M vertices, loses at
     # bench-scale graphs where rounds are stage-overhead-bound
-    use_adj = auto_adjacency(g.num_vertices(), adjacency) and weight is None
+    use_adj = auto_adjacency(n, adjacency) and weight is None
     if use_adj:
-        from graphscope_spark.skew import packed_adjacency
-
         # one-time local agg (already partitioned by src — no exchange);
         # über-degree sources stay row-form (skew.packed_adjacency)
         adj, adj_rest = packed_adjacency(edges, SRC, DST)
         adj = adj.cache()
         adj_rest = adj_rest.cache()
     edges = edges.cache()
-
-    n = g.num_vertices()
-    if n == 0:
-        return g.vertices.select(VID, F.lit(0.0).alias("rank"))
 
     if weight is not None:
         degrees = (
@@ -147,36 +175,41 @@ def pagerank(
             .select(VID, F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg"))
         )
 
+    # one tiny job up front: graphs with no dangling vertices (every
+    # vertex has an out-edge) skip the dangling-pool aggregate entirely
+    # — its mass is identically 0, and dropping the per-round 1-row
+    # aggregate removes two serial stages per superstep
+    has_dangling = degrees.where(F.col("out_deg") == 0).limit(1).count() > 0
+
+    if sources is None:
+        r0 = F.lit(1.0 / n)
+        carried = ["out_deg"]
+    else:
+        src_flag = sources.select(F.col(sources.columns[0]).alias(VID)).distinct()
+        n_src = src_flag.count()
+        if n_src == 0:
+            raise ValueError("personalized_pagerank needs a non-empty source set")
+        degrees = degrees.join(
+            src_flag.withColumn("_p", F.lit(1.0 / n_src)), VID, "left"
+        ).select(VID, "out_deg", F.coalesce("_p", F.lit(0.0)).alias("tele"))
+        r0 = F.col("tele")
+        carried = ["out_deg", "tele"]
+
     # fixed-round runs never read old_rank (no convergence test): drop
     # the column — a third less state to checkpoint and re-scan per
     # round, which is the memory-bandwidth-bound part of a superstep
     track_delta = tol is not None
 
     def init() -> DataFrame:
-        r0 = F.lit(1.0 / n)
         cols = [VID, r0.alias("rank")]
         if track_delta:
             cols.append(r0.alias("old_rank"))
-        return degrees.select(*cols, "out_deg").repartition(p, VID)
-
-    # one tiny job up front: graphs with no dangling vertices (every
-    # vertex has an out-edge) skip the dangling-pool aggregate entirely
-    # — its mass is identically 0, and dropping the per-round 1-row
-    # aggregate removes two serial stages per superstep
-    has_dangling = (
-        degrees.where(F.col("out_deg") == 0).limit(1).count() > 0
-    )
+        return degrees.select(*cols, *carried).repartition(p, VID)
 
     hot = None
     if salt_hot_threshold is not None:
-        from graphscope_spark.skew import hot_keys
-
-        hot = hot_keys(
-            edges.groupBy(F.col(DST).alias(VID)).agg(F.count(F.lit(1)).alias("in_deg")),
-            VID,
-            "in_deg",
-            salt_hot_threshold,
-        ).cache()
+        in_deg = edges.groupBy(F.col(DST).alias(VID)).agg(F.count(F.lit(1)).alias("in_deg"))
+        hot = hot_keys(in_deg, VID, "in_deg", salt_hot_threshold).cache()
         hot.count()
 
     def step(state: DataFrame, k: int) -> StepResult:
@@ -200,26 +233,15 @@ def pagerank(
             else F.col("rank") / F.col("out_deg")
         )
         if use_adj:
-            packed = adj.join(hstate, adj[SRC] == hstate[VID]).select(
-                F.col(SRC).alias("_src"),
-                F.explode("_nbrs").alias(VID),
-                contrib_c.alias("c"),
+            msgs = packed_msgs(
+                adj, adj_rest, hstate, {"c": contrib_c},
+                src=SRC, dst=DST, vid=VID, src_out="_src",
             )
-            hub = adj_rest.join(hstate, adj_rest[SRC] == hstate[VID]).select(
-                F.col(SRC).alias("_src"),
-                F.col(DST).alias(VID),
-                contrib_c.alias("c"),
-            )
-            msgs = packed.unionByName(hub)
         else:
             msgs = edges.join(hstate, edges[SRC] == hstate[VID]).select(
-                F.col(SRC).alias("_src"),
-                F.col(DST).alias(VID),
-                contrib_c.alias("c"),
+                F.col(SRC).alias("_src"), F.col(DST).alias(VID), contrib_c.alias("c")
             )
         if hot is not None:
-            from graphscope_spark.skew import salted_sum
-
             contribs = salted_sum(
                 msgs, VID, "c", "contrib", hot=hot, salt_n=salt_n, salt_src="_src"
             )
@@ -228,17 +250,19 @@ def pagerank(
         joined = state.hint("shuffle_hash").join(contribs, VID, "left")
         if dang is not None:
             joined = joined.crossJoin(F.broadcast(dang))
-            rank_expr = (
-                alpha * F.coalesce("contrib", F.lit(0.0))
-                + (1.0 - alpha) / n
-                + alpha * F.col("_dang") / n
-            )
+        gathered = alpha * F.coalesce("contrib", F.lit(0.0))
+        if sources is None:
+            rank_expr = gathered + (1.0 - alpha) / n
+            if dang is not None:
+                rank_expr = rank_expr + alpha * F.col("_dang") / n
+        elif dang is not None:
+            rank_expr = gathered + ((1.0 - alpha) + alpha * F.col("_dang")) * F.col("tele")
         else:
-            rank_expr = alpha * F.coalesce("contrib", F.lit(0.0)) + (1.0 - alpha) / n
+            rank_expr = gathered + (1.0 - alpha) * F.col("tele")
         out_cols = [VID, rank_expr.alias("rank")]
         if track_delta:
             out_cols.append(state["rank"].alias("old_rank"))
-        nxt = joined.select(*out_cols, "out_deg")
+        nxt = joined.select(*out_cols, *carried)
         if not track_delta:
             return StepResult(nxt)
 
@@ -251,9 +275,6 @@ def pagerank(
 
         return StepResult(nxt, delta_fn=delta_fn)
 
-    run = runner or SuperstepRunner(
-        spark, "pagerank", checkpoint_dir=checkpoint_dir, resume=resume
-    )
     # Batched convergence (tol with sync_every > 1) is sound for this
     # contractive iteration: the L1 delta shrinks monotonically (factor
     # ~alpha per round), so checking only at batch boundaries can stop
@@ -295,7 +316,7 @@ def personalized_pagerank(
     `pagerank_push` / `pagerank_push_opt` (.gs_conf.yaml:10-25,
     apps/pagerank/pagerank_push*) — this is the pull/power-iteration
     formulation of the same stationary equation, which is the shape that
-    runs as one join+groupBy superstep on Spark:
+    runs as PageRank's superstep on Spark:
 
         r⁰ = p   (uniform on S)
         rᵏ⁺¹[v] = α·Σ_{u→v} rᵏ[u]/outdeg(u)
@@ -304,78 +325,7 @@ def personalized_pagerank(
     Returns (vid long, rank double); ranks sum to 1 every round.
     """
     spark: SparkSession = g.edges.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (g.edges if g.directed else g.symmetrized()).select(SRC, DST)
-    if g.num_partitions != p:
-        edges = edges.repartition(p, SRC)
-    edges = edges.cache()
-    n = g.num_vertices()
-    if n == 0:
-        return g.vertices.select(VID, F.lit(0.0).alias("rank"))
-    src_flag = sources.select(F.col(sources.columns[0]).alias(VID)).distinct()
-    n_src = src_flag.count()
-    if n_src == 0:
-        raise ValueError("personalized_pagerank needs a non-empty source set")
-
-    degrees = g.out_degrees() if g.directed else (
-        edges.groupBy(F.col(SRC).alias(VID))
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .join(g.vertices.select(VID), VID, "right")
-        .select(VID, F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg"))
+    return _power_iteration(
+        g, sources, alpha, max_iter, tol, SuperstepRunner(spark, "ppr"),
+        sync_every if tol is None else 1, None,
     )
-    base = degrees.join(
-        src_flag.withColumn("_p", F.lit(1.0 / n_src)), VID, "left"
-    ).select(VID, "out_deg", F.coalesce("_p", F.lit(0.0)).alias("p"))
-
-    def init() -> DataFrame:
-        return base.select(VID, F.col("p").alias("rank"), F.col("p").alias("old_rank"),
-                           "out_deg", "p").repartition(p, VID)
-
-    def step(state: DataFrame, k: int) -> StepResult:
-        dang = state.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("out_deg") == 0, F.col("rank"))), F.lit(0.0)
-            ).alias("_dang")
-        )
-        hstate = state.hint("shuffle_hash")
-        contribs = (
-            edges.join(hstate, edges[SRC] == hstate[VID])
-            .select(F.col(DST).alias(VID), (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy(VID)
-            .agg(F.sum("c").alias("contrib"))
-        )
-        nxt = (
-            state.hint("shuffle_hash").join(contribs, VID, "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                VID,
-                (
-                    alpha * F.coalesce("contrib", F.lit(0.0))
-                    + ((1.0 - alpha) + alpha * F.col("_dang")) * F.col("p")
-                ).alias("rank"),
-                state["rank"].alias("old_rank"),
-                "out_deg",
-                "p",
-            )
-        )
-
-        def delta_fn(m: DataFrame) -> float:
-            return (
-                m.agg(F.sum(F.abs(F.col("rank") - F.col("old_rank")))).collect()[0][0]
-                or 0.0
-            )
-
-        return StepResult(nxt, delta_fn=delta_fn)
-
-    run = SuperstepRunner(spark, "ppr")
-    with one_shuffle_mode(spark):
-        final = run.run(
-            init,
-            step,
-            max_iterations=max_iter,
-            tol=(tol * n if tol is not None else None),
-            sync_every=sync_every if tol is None else 1,
-        )
-    result = final.select(VID, "rank")
-    edges.unpersist()
-    return result

@@ -45,16 +45,17 @@ from pyspark.sql import DataFrame, SparkSession
 def one_shuffle_mode(spark: SparkSession):
     """Run an iterative loop with AQE disabled (restored on exit).
 
-    Why: under AQE, the LogicalRDD produced by ``localCheckpoint``
-    reports UnknownPartitioning, so every superstep re-exchanges the
-    vertex-state DataFrame into both of its joins.  With AQE off the
-    checkpoint keeps its HashPartitioning(vid, P): a state kept
-    hash(vid, P), edges cached hash(src, P), and ``shuffle_hash`` join
-    hints plan each superstep with exactly ONE exchange (the message
-    groupBy) and no sorts — verified via .explain("formatted") at 4M
-    vertices / 13M edges.  AQE's skew-join split is not lost value
-    inside these loops: the single remaining shuffle is an aggregation,
-    which partial (map-side) aggregation already de-skews.
+    With AQE off, edges cached hash(src, P) and ``shuffle_hash`` join
+    hints on the state, a superstep plans no Sort and never
+    re-exchanges the cached edge side.  It does NOT plan one exchange
+    per round: ``stats_barrier`` and ``columnar_barrier`` rebuild the
+    state over an RDD (a LogicalRDD with unknown partitioning), so every
+    round after the first re-exchanges the state by hash(vid) into both
+    of its joins — three Exchanges per PageRank round, next to the
+    message groupBy (tests/test_plans.py pins the shape; dropping the
+    two state exchanges is a ROADMAP item).  AQE's skew-join split is
+    not lost value inside these loops: the heavy shuffle is the message
+    aggregation, which partial (map-side) aggregation already de-skews.
     """
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -139,7 +140,7 @@ def stats_barrier(df: DataFrame) -> DataFrame:
     return out
 
 
-def columnar_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+def columnar_barrier(df: DataFrame) -> DataFrame:
     """Lineage/stats barrier backed by the COLUMNAR SQL cache instead
     of a local checkpoint.
 
@@ -151,15 +152,14 @@ def columnar_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
     wrapping the post-persist ``toRdd`` in a fresh LogicalRDD gives the
     same constant-plan-size chaining.  Unlike a local checkpoint the
     lineage survives, so eviction under memory pressure recomputes
-    instead of failing — strictly safer at scale.
+    instead of failing — strictly safer at scale.  Lazy: the cache
+    fills on the first job that computes the state.
 
     Release with ``unpersist_barrier`` (handle = the persisted Dataset).
     """
     from pyspark.storagelevel import StorageLevel
 
     d = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        d.count()
     try:
         jdf = d._jdf
         # planned AFTER persist → reads the InMemoryRelation
@@ -199,30 +199,24 @@ class SuperstepRunner:
         spark: SparkSession,
         name: str,
         checkpoint_dir: str | None = None,
-        checkpoint_every: int = 1,
         resume: bool = True,
-        barrier_mode: str = "columnar",
     ) -> None:
-        """``barrier_mode`` selects the barrier for CHAINED
-        INTERMEDIATE rounds (sync_every > 1): "columnar" (compressed
-        SQL cache — see columnar_barrier; DEFAULT since round 3) or
-        "checkpoint" (localCheckpoint rows).  Sync-point states always
-        use the lineage-truncating localCheckpoint (see run()).
+        """Chained intermediate rounds (sync_every > 1) are held in the
+        compressed columnar SQL cache (see columnar_barrier); sync-point
+        states use the lineage-truncating localCheckpoint (see run()).
 
         Round-3 A/B at 4M vertices / 13.1M edges, fixed-10-round
         PageRank chained into one job, 3 interleaved pairs on a noisy
-        host: columnar 32.2/35.7/40.0 s vs checkpoint 17.0/47.4/95.9 s
-        (medians 35.7 vs 47.4, identical checksums).  Columnar wins the
-        median AND is far less variance-prone: ten rounds of
-        deserialized localCheckpoint rows (~100 B/row heap objects)
-        resident at once put the old default at the mercy of GC,
-        while lz4 columnar batches are a handful of arrays."""
+        host: columnar 32.2/35.7/40.0 s vs localCheckpoint rows
+        17.0/47.4/95.9 s (medians 35.7 vs 47.4, identical checksums).
+        Columnar wins the median AND is far less variance-prone: ten
+        rounds of deserialized localCheckpoint rows (~100 B/row heap
+        objects) resident at once put them at the mercy of GC, while
+        lz4 columnar batches are a handful of arrays."""
         self.spark = spark
         self.name = name
         self.dir = checkpoint_dir
-        self.checkpoint_every = max(1, checkpoint_every)
         self.resume = resume
-        self.barrier_mode = barrier_mode
         self.metrics: list[dict] = []
 
     # -- checkpoint layout --------------------------------------------
@@ -329,14 +323,8 @@ class SuperstepRunner:
                 # data is computed only by the sync-point job; the
                 # persisted state materializes on first compute, so
                 # multi-consumer steps read it once.
-                if self.barrier_mode == "columnar":
-                    state = columnar_barrier(res.state, eager=False)
-                    stale.append(state._gs_cache_handle)
-                else:
-                    state = res.state.localCheckpoint(eager=False)
-                    h = _ckpt_handle(state)
-                    if h is not None:
-                        stale.append(h)
+                state = columnar_barrier(res.state)
+                stale.append(state._gs_cache_handle)
                 self._record(
                     {
                         "algorithm": self.name,
@@ -350,7 +338,7 @@ class SuperstepRunner:
                 )
                 continue
             lineage: list[dict] = []
-            if self.dir and (k % self.checkpoint_every == 0 or k == max_iterations - 1):
+            if self.dir:
                 path = self._iter_path(k)
                 res.state.write.mode("overwrite").parquet(path)
                 state = self.spark.read.parquet(path)
@@ -360,8 +348,8 @@ class SuperstepRunner:
                     if d.startswith("iter_") and int(d.split("_")[1]) < k - 1:
                         shutil.rmtree(os.path.join(self.dir, d), ignore_errors=True)
             else:
-                # sync points ALWAYS use the lineage-TRUNCATING eager
-                # localCheckpoint, even in columnar mode: truncation is
+                # sync points use the lineage-TRUNCATING eager
+                # localCheckpoint, not the columnar cache: truncation is
                 # what makes unpersisting the chained intermediates
                 # below safe (nothing can recompute through a
                 # checkpoint back into a freed cache; a columnar sync
@@ -376,9 +364,7 @@ class SuperstepRunner:
                 except Exception:  # pragma: no cover
                     pass
             stale = []
-            h = getattr(state, "_gs_cache_handle", None) or getattr(
-                state, "_gs_ckpt_handle", None
-            )
+            h = getattr(state, "_gs_ckpt_handle", None)
             if h is not None:
                 stale.append(h)
             delta = res.delta

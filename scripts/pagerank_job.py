@@ -58,12 +58,6 @@ def main() -> None:
         help="shuffle/data partitions (default max(cores, 8)); several "
         "waves per stage smooth stragglers on noisy hosts",
     )
-    ap.add_argument(
-        "--barrier",
-        default="checkpoint",
-        choices=["checkpoint", "columnar"],
-        help="per-round state barrier: localCheckpoint rows vs compressed columnar cache",
-    )
     ap.add_argument("--pages", type=int, default=60_000)
     ap.add_argument("--pages-path", default=None, help="pre-generated pages parquet")
     ap.add_argument("--tol", type=float, default=1e-6)
@@ -155,7 +149,6 @@ def main() -> None:
         "pagerank",
         checkpoint_dir=args.checkpoint_dir,
         resume=False,
-        barrier_mode=args.barrier,
     )
     tol = args.tol
     max_iter = args.max_iter

@@ -6,8 +6,7 @@ event log on, then parses the log into a per-stage table (name, wall,
 task-time sum, shuffle read/write bytes, GC) so the per-round cost can
 be attributed (scheduling vs shuffle vs compute) before optimizing.
 
-Usage: python scripts/profile_pagerank.py [vertices] [rounds] [cores] [sync_every] [kernel]
-``kernel``: sql (default) | csr
+Usage: python scripts/profile_pagerank.py [vertices] [rounds] [cores] [sync_every]
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ def main() -> None:
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     cores = int(sys.argv[3]) if len(sys.argv) > 3 else 32
     sync_every = int(sys.argv[4]) if len(sys.argv) > 4 else 5
-    kernel = sys.argv[5] if len(sys.argv) > 5 else "sql"
     evdir = f"/tmp/gs_eventlog_{os.getpid()}"
     os.makedirs(evdir, exist_ok=True)
 
@@ -63,29 +61,16 @@ def main() -> None:
 
     runner = SuperstepRunner(spark, "pagerank", resume=False)
     t0 = time.time()
-    if kernel == "csr":
-        from graphscope_spark.csr import pagerank_csr
-
-        res = pagerank_csr(
-            g,
-            tol=None,
-            max_iter=rounds,
-            runner=runner,
-            sync_every=sync_every,
-            blocks_path=f"/tmp/gs_csr_prof_{os.getpid()}",
-        )
-    else:
-        res = pagerank(g, tol=None, max_iter=rounds, runner=runner, sync_every=sync_every)
+    res = pagerank(g, tol=None, max_iter=rounds, runner=runner, sync_every=sync_every)
     res.count()
     wall = time.time() - t0
-    # rounds-only time (excludes one-time CSR block build / degree prep):
+    # rounds-only time (excludes one-time degree prep):
     # chained rounds record ~0 and the sync round carries the job, so sum
     # of metrics = in-loop wall
     loop_sec = sum(m["seconds"] for m in runner.metrics)
     print(
         json.dumps(
             {
-                "kernel": kernel,
                 "wall": round(wall, 2),
                 "loop_sec": round(loop_sec, 2),
                 "rounds": rounds,

@@ -54,11 +54,11 @@ def _run(cmd: list[str], timeout: int) -> tuple[int, str]:
 
 def unit_headline() -> dict:
     code, out = _run(
-        [sys.executable, "scripts/profile_pagerank.py", "16000000", "10", "32", "10", "sql"],
+        [sys.executable, "scripts/profile_pagerank.py", "16000000", "10", "32", "10"],
         1800,
     )
     line = next(
-        (ln for ln in out.splitlines() if ln.startswith('{"kernel"')), "{}"
+        (ln for ln in out.splitlines() if ln.startswith('{"wall"')), "{}"
     )
     return {"unit": "headline", "rc": code, "result": json.loads(line or "{}")}
 

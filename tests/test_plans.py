@@ -8,13 +8,17 @@ than a production run:
   at 10^12 pages the text/lang columns are dead weight — and evaluate
   its UDF once per page;
 - a vertex-id filter must be pushed into the parquet scan;
-- the PageRank gather must keep a partial (map-side) aggregation.
+- the PageRank gather must keep a partial (map-side) aggregation, and
+  each PageRank / personalized-PageRank round must plan no sort and at
+  most three shuffles.
 """
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+
+from graphscope_spark.superstep import SuperstepRunner
 
 
 @pytest.fixture(scope="module")
@@ -65,6 +69,71 @@ def test_pagerank_gather_has_partial_aggregation(spark, pages_parquet):
     msgs = g.edges.groupBy("dst").agg(F.sum(F.col("src").cast("double")).alias("s"))
     plan = msgs._jdf.queryExecution().executedPlan().toString()
     assert "partial_sum" in plan, plan
+
+
+def _node_names(plan) -> list[str]:
+    names = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _node_names(children.apply(i))
+    return names
+
+
+@pytest.fixture(scope="module")
+def two_out_graph(spark):
+    """40 vertices, two out-edges each: no dangling vertex, so a round
+    plans no dangling-pool aggregate."""
+    from graphscope_spark.graph import Graph
+
+    edges = [(i, (i * 3 + 1) % 40) for i in range(40)] + [
+        (i, (i * 7 + 2) % 40) for i in range(40)
+    ]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    return Graph.from_edges(e, directed=True, num_partitions=4)
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "pagerank_adjacency", "ppr"])
+def test_pagerank_round_plan_shape(spark, two_out_graph, monkeypatch, algo):
+    """Rounds after the first (their state comes out of a barrier —
+    columnar after round 0, a checkpoint after round 1) plan the message
+    shuffle plus the state re-exchanged into both joins: at most 3
+    Exchanges, no Sort, and the packed gather's one Generate."""
+    import importlib
+
+    from graphscope_spark.algorithms import pagerank, personalized_pagerank
+
+    runners = []
+
+    class Runner(SuperstepRunner):
+        """Records the node names of every round's physical plan."""
+
+        def run(self, init, step, **kw):
+            runners.append(self)
+            self.plans = []
+
+            def planned_step(state, k):
+                res = step(state, k)
+                self.plans.append(_node_names(res.state._jdf.queryExecution().executedPlan()))
+                return res
+
+            return super().run(init, planned_step, **kw)
+
+    kw = dict(tol=None, max_iter=4, sync_every=2)
+    if algo == "ppr":
+        mod = importlib.import_module("graphscope_spark.algorithms.pagerank")
+        monkeypatch.setattr(mod, "SuperstepRunner", Runner)
+        sources = spark.createDataFrame([(1,), (5,)], "vid long")
+        personalized_pagerank(two_out_graph, sources, **kw).count()
+    else:
+        adjacency = algo == "pagerank_adjacency"
+        pagerank(two_out_graph, runner=Runner(spark, "pagerank"),
+                 adjacency=adjacency, **kw).count()
+    (runner,) = runners
+    assert len(runner.plans) == 4
+    for k, names in enumerate(runner.plans[1:], start=1):
+        assert "Sort" not in names and "SortMergeJoin" not in names, (k, names)
+        assert names.count("Exchange") <= 3, (k, names)
+        assert names.count("Generate") == int(algo == "pagerank_adjacency"), (k, names)
 
 
 def test_boundary_uses_broadcast_join(spark, tiny_graph):
