@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import DST, SRC, VID, Graph
+from graphscope_spark.skew import Gather
 from graphscope_spark.superstep import StepResult, SuperstepRunner, one_shuffle_mode
 
 
@@ -42,23 +43,11 @@ def articlerank(
         SRC, DST
     )
     n = g.num_vertices()
-    from graphscope_spark.skew import auto_adjacency
-
-    adjacency = auto_adjacency(n, adjacency)
-    if adjacency:
-        from graphscope_spark.skew import packed_adjacency, packed_msgs
-
-        adj, rest = packed_adjacency(edges, src=SRC, dst=DST)
-        adj = adj.cache()
-        rest = rest.cache()
-    else:
-        if g.num_partitions != p:
-            edges = edges.repartition(p, SRC)
-        adj = rest = None
-    edges = edges.cache()
-
     if n == 0:
         return g.vertices.select(VID, F.lit(0.0).alias("rank"))
+    if g.num_partitions != p:
+        edges = edges.repartition(p, SRC)
+    gather = Gather(edges, n, adjacency, SRC, DST)
 
     degrees = (
         edges.groupBy(F.col(SRC).alias(VID))
@@ -76,15 +65,7 @@ def articlerank(
     def step(state: DataFrame, k: int) -> StepResult:
         state = state.hint("shuffle_hash")
         contrib_expr = damping * F.col("rank") / (F.col("deg") + F.lit(avg))
-        if adjacency:
-            msgs = packed_msgs(
-                adj, rest, state, {"c": contrib_expr},
-                src=SRC, dst=DST, vid=VID,
-            )
-        else:
-            msgs = edges.join(state, edges[SRC] == state[VID]).select(
-                F.col(DST).alias(VID), contrib_expr.alias("c")
-            )
+        msgs = gather.msgs(state, {"c": contrib_expr}, VID)
         contribs = msgs.groupBy(VID).agg(F.sum("c").alias("contrib"))
         nxt = state.hint("shuffle_hash").join(contribs, VID, "left").select(
             VID,
@@ -100,8 +81,5 @@ def articlerank(
         final = run.run(init, step, max_iterations=max_iter, tol=None,
                         sync_every=sync_every)
     result = final.select(VID, "rank")
-    edges.unpersist()
-    if adjacency:
-        adj.unpersist()
-        rest.unpersist()
+    gather.unpersist()
     return result

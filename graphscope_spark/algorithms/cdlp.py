@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import DST, SRC, VID, Graph
+from graphscope_spark.skew import Gather
 from graphscope_spark.superstep import StepResult, SuperstepRunner
 
 
@@ -44,38 +45,19 @@ def cdlp(
         )
     else:
         msg_edges = g.symmetrized()
-    # skew-aware packed adjacency gather: one array row per non-hub
-    # source (multiplicity preserved — collect_list keeps duplicates,
-    # the LDBC directed-CDLP double-count contract), hub fan-out
-    # row-form; count aggregation is order-independent so the picked
-    # labels are identical to the edge-join plan
-    from graphscope_spark.skew import auto_adjacency, packed_adjacency
-
-    adjacency = auto_adjacency(g.num_vertices(), adjacency)
-    if adjacency:
-        adj, adj_rest = packed_adjacency(msg_edges, SRC, DST)
-        adj = adj.cache()
-        adj_rest = adj_rest.cache()
-    else:
-        adj = adj_rest = None
-    msg_edges = msg_edges.cache()
+    # packed, the adjacency keeps multiplicity (collect_list keeps
+    # duplicates — the LDBC directed-CDLP double-count contract), and
+    # the count aggregation is order-independent, so both layouts pick
+    # identical labels
+    gather = Gather(msg_edges, g.num_vertices(), adjacency, SRC, DST)
 
     def init() -> DataFrame:
         return g.vertices.select(VID, F.col(VID).alias("label"))
 
     def step(state: DataFrame, k: int) -> StepResult:
-        if adjacency:
-            scattered = adj.join(state, adj[SRC] == state[VID]).select(
-                F.explode("_nbrs").alias(VID), "label"
-            ).unionByName(
-                adj_rest.join(state, adj_rest[SRC] == state[VID]).select(
-                    F.col(DST).alias(VID), "label"
-                )
-            )
-        else:
-            scattered = msg_edges.join(
-                state.hint("shuffle_hash"), msg_edges[SRC] == state[VID]
-            ).select(F.col(DST).alias(VID), "label")
+        scattered = gather.msgs(
+            state.hint("shuffle_hash"), {"label": F.col("label")}, VID
+        )
         counts = scattered.groupBy(VID, "label").agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -93,8 +75,5 @@ def cdlp(
     run = SuperstepRunner(spark, "cdlp", checkpoint_dir=checkpoint_dir, resume=resume)
     final = run.run(init, step, max_iterations=max_round, tol=None, sync_every=sync_every)
     out = final.select(VID, "label")
-    msg_edges.unpersist()
-    if adj is not None:
-        adj.unpersist()
-        adj_rest.unpersist()
+    gather.unpersist()
     return out

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import DST, SRC, VID, Graph
+from graphscope_spark.skew import Gather
 from graphscope_spark.superstep import StepResult, SuperstepRunner, one_shuffle_mode
 
 
@@ -48,22 +49,11 @@ def eigenvector_centrality(
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = (g.edges if g.directed else g.symmetrized()).select(SRC, DST)
     n = g.num_vertices()
-    from graphscope_spark.skew import auto_adjacency
-
-    adjacency = auto_adjacency(n, adjacency)
-    if adjacency:
-        from graphscope_spark.skew import packed_adjacency, packed_msgs
-
-        adj, rest = packed_adjacency(edges, src=SRC, dst=DST)
-        adj = adj.cache()
-        rest = rest.cache()
-    else:
-        if g.num_partitions != p:
-            edges = edges.repartition(p, SRC)
-        edges = edges.cache()
-        adj = rest = None
     if n == 0:
         return g.vertices.select(VID, F.lit(0.0).alias("centrality"))
+    if g.num_partitions != p:
+        edges = edges.repartition(p, SRC)
+    gather = Gather(edges, n, adjacency, SRC, DST)
 
     cached: list[DataFrame] = []
 
@@ -72,15 +62,7 @@ def eigenvector_centrality(
 
     def step(state: DataFrame, k: int) -> StepResult:
         hstate = state.hint("shuffle_hash")
-        if adjacency:
-            stream = packed_msgs(
-                adj, rest, hstate.select(VID, "x"), {"m": F.col("x")},
-                src=SRC, dst=DST, vid=VID,
-            )
-        else:
-            stream = edges.join(hstate, edges[SRC] == hstate[VID]).select(
-                F.col(DST).alias(VID), F.col("x").alias("m")
-            )
+        stream = gather.msgs(hstate.select(VID, "x"), {"m": F.col("x")}, VID)
         msgs = stream.groupBy(VID).agg(F.sum("m").alias("s"))
         raw = state.hint("shuffle_hash").join(msgs, VID, "left").select(
             VID,
@@ -117,11 +99,7 @@ def eigenvector_centrality(
         final = final.localCheckpoint(eager=True)
     for c in cached:
         c.unpersist()
-    if adjacency:
-        adj.unpersist()
-        rest.unpersist()
-    else:
-        edges.unpersist()
+    gather.unpersist()
     return final.select(VID, F.col("x").alias("centrality"))
 
 
@@ -144,37 +122,18 @@ def katz_centrality(
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = (g.edges if g.directed else g.symmetrized()).select(SRC, DST)
     n = g.num_vertices()
-    from graphscope_spark.skew import auto_adjacency
-
-    adjacency = auto_adjacency(n, adjacency)
-    if adjacency:
-        from graphscope_spark.skew import packed_adjacency, packed_msgs
-
-        adj, rest = packed_adjacency(edges, src=SRC, dst=DST)
-        adj = adj.cache()
-        rest = rest.cache()
-    else:
-        if g.num_partitions != p:
-            edges = edges.repartition(p, SRC)
-        edges = edges.cache()
-        adj = rest = None
     if n == 0:
         return g.vertices.select(VID, F.lit(0.0).alias("centrality"))
+    if g.num_partitions != p:
+        edges = edges.repartition(p, SRC)
+    gather = Gather(edges, n, adjacency, SRC, DST)
 
     def init() -> DataFrame:
         return g.vertices.select(VID, F.lit(0.0).alias("x")).repartition(p, VID)
 
     def step(state: DataFrame, k: int) -> StepResult:
         hstate = state.hint("shuffle_hash")
-        if adjacency:
-            stream = packed_msgs(
-                adj, rest, hstate.select(VID, "x"), {"m": F.col("x")},
-                src=SRC, dst=DST, vid=VID,
-            )
-        else:
-            stream = edges.join(hstate, edges[SRC] == hstate[VID]).select(
-                F.col(DST).alias(VID), F.col("x").alias("m")
-            )
+        stream = gather.msgs(hstate.select(VID, "x"), {"m": F.col("x")}, VID)
         msgs = stream.groupBy(VID).agg(F.sum("m").alias("s"))
         nxt = state.hint("shuffle_hash").join(msgs, VID, "left").select(
             VID,
@@ -200,11 +159,7 @@ def katz_centrality(
             sync_every=sync_every if tol is None else 1,
         )
     norm = final.agg(F.sqrt(F.sum(F.col("x") * F.col("x")))).collect()[0][0] or 1.0
-    if adjacency:
-        adj.unpersist()
-        rest.unpersist()
-    else:
-        edges.unpersist()
+    gather.unpersist()
     return final.select(VID, (F.col("x") / norm).alias("centrality"))
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import DST, SRC, VID, Graph
+from graphscope_spark.skew import Gather
 from graphscope_spark.superstep import StepResult, SuperstepRunner, one_shuffle_mode
 
 
@@ -42,29 +43,14 @@ def hits(
     in BOTH directions (out-lists for the auth pass, in-lists for the
     hub pass — the analog of the reference's kBothOutIn CSR pair): the
     per-round probe joins |V| packed rows instead of |E| edge rows,
-    über-degree hubs stay row-form (skew.packed_adjacency)."""
+    über-degree hubs stay row-form (skew.Gather)."""
     spark = g.edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     base_edges = g.distinct_edges()
     n = g.num_vertices()
-    from graphscope_spark.skew import auto_adjacency
-
-    adjacency = auto_adjacency(n, adjacency)
-    if adjacency:
-        from graphscope_spark.skew import packed_adjacency, packed_msgs
-
-        adj_out, rest_out = packed_adjacency(base_edges, src=SRC, dst=DST)
-        adj_in, rest_in = packed_adjacency(base_edges, src=DST, dst=SRC)
-        edges_out = adj_out.cache()
-        rest_out = rest_out.cache()
-        edges_in = adj_in.cache()
-        rest_in = rest_in.cache()
-    else:
-        edges_out = (
-            base_edges if g.num_partitions == p else base_edges.repartition(p, SRC)
-        ).cache()
-        edges_in = base_edges.repartition(p, DST).cache()
-        rest_out = rest_in = None
+    out_edges = base_edges if g.num_partitions == p else base_edges.repartition(p, SRC)
+    g_out = Gather(out_edges, n, adjacency, SRC, DST)
+    g_in = Gather(base_edges.repartition(p, DST), n, adjacency, DST, SRC)
 
     def init() -> DataFrame:
         return g.vertices.select(
@@ -75,15 +61,7 @@ def hits(
 
     def step(state: DataFrame, k: int) -> StepResult:
         hubs = state.select(VID, "hub").hint("shuffle_hash")
-        if adjacency:
-            auth_msgs = packed_msgs(
-                edges_out, rest_out, hubs, {"m": F.col("hub")},
-                src=SRC, dst=DST, vid=VID,
-            )
-        else:
-            auth_msgs = edges_out.join(hubs, edges_out[SRC] == hubs[VID]).select(
-                F.col(DST).alias(VID), F.col("hub").alias("m")
-            )
+        auth_msgs = g_out.msgs(hubs, {"m": F.col("hub")}, VID)
         auth_raw = (
             auth_msgs.groupBy(VID).agg(F.sum("m").alias("auth_raw"))
         ).cache()
@@ -95,15 +73,7 @@ def hits(
             VID, (F.col("auth_raw") / F.col("_an")).alias("new_auth")
         )
         hauth = auth.hint("shuffle_hash")
-        if adjacency:
-            hub_msgs = packed_msgs(
-                edges_in, rest_in, hauth, {"m": F.col("new_auth")},
-                src=DST, dst=SRC, vid=VID,
-            )
-        else:
-            hub_msgs = edges_in.join(hauth, edges_in[DST] == hauth[VID]).select(
-                F.col(SRC).alias(VID), F.col("new_auth").alias("m")
-            )
+        hub_msgs = g_in.msgs(hauth, {"m": F.col("new_auth")}, VID)
         hub_raw = (
             hub_msgs.groupBy(VID).agg(F.sum("m").alias("hub_raw"))
         ).cache()
@@ -145,11 +115,8 @@ def hits(
         final = final.localCheckpoint(eager=True)  # detach from round caches
     for c in cached:
         c.unpersist()
-    edges_out.unpersist()
-    edges_in.unpersist()
-    if rest_out is not None:
-        rest_out.unpersist()
-        rest_in.unpersist()
+    g_out.unpersist()
+    g_in.unpersist()
     return final.select(VID, "hub", "auth")
 
 
@@ -174,39 +141,22 @@ def salsa(
     hub/authority support (registry has no salsa entry — this extends
     the link-analysis family alongside hits/articlerank).
 
-    Spark plan: identical shuffle shape to :func:`hits` — two join-aggs
-    per round over the doubly-partitioned edge cache; the degree
-    normalizations ride the SAME joins (out/in degree folded onto the
-    edge table once, up front), and there is NO normalization aggregate
-    at all, so a round is exactly two shuffles."""
+    Spark plan: the shuffle shape of :func:`hits` — two gathers per
+    round over the two-direction edge layout (skew.Gather); the degree
+    normalizations ride the STATE (hub ⋈ out-degree before the auth
+    pass, auth ⋈ in-degree before the hub pass — vid joins co-partitioned
+    hash(vid, P), so no extra shuffle under one_shuffle_mode), and there
+    is NO normalization aggregate at all."""
     spark = g.edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     base = g.distinct_edges().select(SRC, DST)
     odeg = base.groupBy(SRC).agg(F.count(F.lit(1)).alias("od"))
     ideg = base.groupBy(DST).agg(F.count(F.lit(1)).alias("id_"))
-    from graphscope_spark.skew import auto_adjacency
-
-    adjacency = auto_adjacency(g.num_vertices(), adjacency)
-    if adjacency:
-        # packed gather in both directions; degree normalizations ride
-        # the STATE instead of the edge table (co-partitioned vid joins,
-        # no extra shuffle under one_shuffle_mode)
-        from graphscope_spark.skew import packed_adjacency, packed_msgs
-
-        adj_out, rest_out = packed_adjacency(base, src=SRC, dst=DST)
-        adj_in, rest_in = packed_adjacency(base, src=DST, dst=SRC)
-        edges_out = adj_out.cache()
-        rest_out = rest_out.cache()
-        edges_in = adj_in.cache()
-        rest_in = rest_in.cache()
-        odeg_v = odeg.select(F.col(SRC).alias(VID), "od").repartition(p, VID).cache()
-        ideg_v = ideg.select(F.col(DST).alias(VID), "id_").repartition(p, VID).cache()
-    else:
-        # fold both degrees onto the edge table once; cache both layouts
-        e = base.join(odeg, SRC).join(ideg, DST).select(SRC, DST, "od", "id_")
-        edges_out = e.repartition(p, SRC).cache()
-        edges_in = e.repartition(p, DST).cache()
-        rest_out = rest_in = odeg_v = ideg_v = None
+    n = g.num_vertices()
+    g_out = Gather(base.repartition(p, SRC), n, adjacency, SRC, DST)
+    g_in = Gather(base.repartition(p, DST), n, adjacency, DST, SRC)
+    odeg_v = odeg.select(F.col(SRC).alias(VID), "od").repartition(p, VID).cache()
+    ideg_v = ideg.select(F.col(DST).alias(VID), "id_").repartition(p, VID).cache()
     n_hubs = odeg.count()
 
     def init() -> DataFrame:
@@ -220,48 +170,20 @@ def salsa(
     cached: list[DataFrame] = []
 
     def step(state: DataFrame, k: int) -> StepResult:
-        if adjacency:
-            hubs = (
-                state.select(VID, "hub")
-                .hint("shuffle_hash")
-                .join(odeg_v.hint("shuffle_hash"), VID)
-            )
-            auth = (
-                packed_msgs(
-                    edges_out, rest_out, hubs,
-                    {"m": F.col("hub") / F.col("od")},
-                    src=SRC, dst=DST, vid=VID,
-                )
-                .groupBy(VID)
-                .agg(F.sum("m").alias("auth"))
-            ).cache()
-            cached.append(auth)
-            auth_st = auth.hint("shuffle_hash").join(
-                ideg_v.hint("shuffle_hash"), VID
-            )
-            hub = (
-                packed_msgs(
-                    edges_in, rest_in, auth_st,
-                    {"m": F.col("auth") / F.col("id_")},
-                    src=DST, dst=SRC, vid=VID,
-                )
-                .groupBy(VID)
-                .agg(F.sum("m").alias("hub"))
-            )
-            return StepResult(hub)
-        hubs = state.select(VID, "hub").hint("shuffle_hash")
+        hubs = (
+            state.select(VID, "hub")
+            .hint("shuffle_hash")
+            .join(odeg_v.hint("shuffle_hash"), VID)
+        )
         auth = (
-            edges_out.join(hubs, edges_out[SRC] == hubs[VID])
-            .select(F.col(DST).alias(VID), (F.col("hub") / F.col("od")).alias("m"))
+            g_out.msgs(hubs, {"m": F.col("hub") / F.col("od")}, VID)
             .groupBy(VID)
             .agg(F.sum("m").alias("auth"))
         ).cache()  # round k's auth — the last one is joined into the result
         cached.append(auth)
+        auth_st = auth.hint("shuffle_hash").join(ideg_v.hint("shuffle_hash"), VID)
         hub = (
-            edges_in.join(
-                auth.hint("shuffle_hash"), edges_in[DST] == auth[VID]
-            )
-            .select(F.col(SRC).alias(VID), (F.col("auth") / F.col("id_")).alias("m"))
+            g_in.msgs(auth_st, {"m": F.col("auth") / F.col("id_")}, VID)
             .groupBy(VID)
             .agg(F.sum("m").alias("hub"))
         )
@@ -281,11 +203,8 @@ def salsa(
             )
             .localCheckpoint(eager=True)
         )
-    for c in cached:
+    for c in (*cached, odeg_v, ideg_v):
         c.unpersist()
-    edges_out.unpersist()
-    edges_in.unpersist()
-    for extra_cache in (rest_out, rest_in, odeg_v, ideg_v):
-        if extra_cache is not None:
-            extra_cache.unpersist()
+    g_out.unpersist()
+    g_in.unpersist()
     return final.select(VID, "hub", "auth")

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graphscope_spark.skew import Gather
+
 
 def lpa_u2i(
     users: DataFrame,
@@ -64,21 +66,11 @@ def lpa_u2i(
         steps 2..max_round alternating u2i (even) / i2u (odd).
     """
     e = edges.select("src", "dst", "w").cache()
-    from graphscope_spark.skew import auto_adjacency
-
-    adjacency = auto_adjacency(users.count(), adjacency)
-    if adjacency:
-        # packed (dst, w) / (src, w) struct adjacency in both
-        # directions — the u2i and i2u gathers probe |users| / |items|
-        # rows instead of |E| (skew.packed_adjacency)
-        from graphscope_spark.skew import packed_adjacency, packed_msgs
-
-        adj_u2i, rest_u2i = packed_adjacency(e, src="src", dst="dst", extra=["w"])
-        adj_i2u, rest_i2u = packed_adjacency(e, src="dst", dst="src", extra=["w"])
-        adj_u2i = adj_u2i.cache()
-        rest_u2i = rest_u2i.cache()
-        adj_i2u = adj_i2u.cache()
-        rest_i2u = rest_i2u.cache()
+    # packed, (dst, w) / (src, w) struct adjacency in both directions —
+    # the u2i and i2u gathers probe |users| / |items| rows instead of |E|
+    n_users = users.count()
+    u2i = Gather(e, n_users, adjacency, "src", "dst", extras=("w",))
+    i2u = Gather(e, n_users, adjacency, "dst", "src", extras=("w",))
 
     # PEval degree statistics (lpa_u2i.h:68-104)
     odeg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("od"))
@@ -102,42 +94,20 @@ def lpa_u2i(
     for step in range(2, max_round + 1):
         if step % 2 == 0:
             # u2i: items pull Σ w·u.label over in-edges (lpa_u2i.h:167-183)
-            if adjacency:
-                ilab = (
-                    packed_msgs(
-                        adj_u2i, rest_u2i, ulab,
-                        {c: F.col("w") * F.col(c) for c in prop_cols},
-                        src="src", dst="dst", vid="vid", extras=("w",),
-                    )
-                    .groupBy("vid")
-                    .agg(*[F.sum(c).alias(c) for c in prop_cols])
-                )
-            else:
-                ilab = (
-                    e.join(ulab.withColumnRenamed("vid", "src"), "src")
-                    .groupBy(F.col("dst").alias("vid"))
-                    .agg(*[F.sum(F.col("w") * F.col(c)).alias(c) for c in prop_cols])
-                )
+            ilab = (
+                u2i.msgs(ulab, {c: F.col("w") * F.col(c) for c in prop_cols}, "vid")
+                .groupBy("vid")
+                .agg(*[F.sum(c).alias(c) for c in prop_cols])
+            )
         else:
             # i2u: tmp = Σ w·i.label, then clamp / degree-normalise
             # (lpa_u2i.h:185-240)
             assert ilab is not None
-            if adjacency:
-                tmp = (
-                    packed_msgs(
-                        adj_i2u, rest_i2u, ilab,
-                        {f"t_{c}": F.col("w") * F.col(c) for c in prop_cols},
-                        src="dst", dst="src", vid="vid", extras=("w",),
-                    )
-                    .groupBy("vid")
-                    .agg(*[F.sum(f"t_{c}").alias(f"t_{c}") for c in prop_cols])
-                )
-            else:
-                tmp = (
-                    e.join(ilab.withColumnRenamed("vid", "dst"), "dst")
-                    .groupBy(F.col("src").alias("vid"))
-                    .agg(*[F.sum(F.col("w") * F.col(c)).alias(f"t_{c}") for c in prop_cols])
-                )
+            tmp = (
+                i2u.msgs(ilab, {f"t_{c}": F.col("w") * F.col(c) for c in prop_cols}, "vid")
+                .groupBy("vid")
+                .agg(*[F.sum(f"t_{c}").alias(f"t_{c}") for c in prop_cols])
+            )
             # the clamp tests the CURRENT label value (lpa_u2i.h:219),
             # not the seed — a label that lands exactly on 0/1 freezes.
             joined = (
@@ -168,7 +138,6 @@ def lpa_u2i(
     out = out.localCheckpoint(eager=True)
     e.unpersist()
     ustats.unpersist()
-    if adjacency:
-        for c in (adj_u2i, rest_u2i, adj_i2u, rest_i2u):
-            c.unpersist()
+    u2i.unpersist()
+    i2u.unpersist()
     return out

@@ -16,7 +16,7 @@ replaced by one concentrated on a source set (``_power_iteration``).
 
 Spark plan per superstep:
     scatter: edges ⋈ state on src — ShuffledHashJoin; edges are cached
-             hash(src, P), or the packed adjacency (skew.packed_msgs)
+             hash(src, P), or the packed adjacency (skew.Gather)
              probes one row per source and explodes the messages.
     gather:  groupBy(dst).sum(rank/out_deg) — the message shuffle
              (|E| rows); map-side partial aggregation collapses hub
@@ -46,9 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import DST, SRC, VID, Graph
-from graphscope_spark.skew import (
-    auto_adjacency, hot_keys, packed_adjacency, packed_msgs, salted_sum,
-)
+from graphscope_spark.skew import Gather, hot_keys, salted_sum
 from graphscope_spark.superstep import StepResult, SuperstepRunner, one_shuffle_mode
 
 
@@ -81,15 +79,15 @@ def pagerank(
     rank·w/Σ_out w and "dangling" means zero outgoing weight; with
     ``weight=None`` this reduces to the unweighted recurrence.
 
-    ``adjacency`` (unweighted runs): freeze the out-adjacency as ONE
-    packed array row per source — the CSR-encoded adjacency partition
-    of the north rule, kept entirely JVM-side (columnar cache of
-    array<long>, no Arrow round-trip).  Per round the state hash join
-    probes |V| adjacency rows instead of |E| edge rows and the edge
-    scan reads each src id once instead of out_deg times; the explode
+    ``adjacency``: freeze the out-adjacency as ONE packed array row per
+    source — the CSR-encoded adjacency partition of the north rule, kept
+    entirely JVM-side (columnar cache of array<long>, or of (dst, w)
+    structs when weighted; no Arrow round-trip).  Per round the state
+    hash join probes |V| adjacency rows instead of |E| edge rows and the
+    edge scan reads each src id once instead of out_deg times; the explode
     regenerates the per-edge messages pipelined straight into the
     partial aggregation, so gather semantics and exchange volume are
-    unchanged.  Falls back to the edge-table join for weighted runs.
+    unchanged.
     """
     spark: SparkSession = g.edges.sparkSession
     run = runner or SuperstepRunner(
@@ -148,17 +146,11 @@ def _power_iteration(
         )
     if g.num_partitions != p:
         edges = edges.repartition(p, SRC)
-    # size-resolved default (scripts/adj_ab_r5.jsonl + r4
-    # pr_tune_r4_adj.jsonl): packed wins ~2x at 16M vertices, loses at
-    # bench-scale graphs where rounds are stage-overhead-bound
-    use_adj = auto_adjacency(n, adjacency) and weight is None
-    if use_adj:
-        # one-time local agg (already partitioned by src — no exchange);
-        # über-degree sources stay row-form (skew.packed_adjacency)
-        adj, adj_rest = packed_adjacency(edges, SRC, DST)
-        adj = adj.cache()
-        adj_rest = adj_rest.cache()
-    edges = edges.cache()
+    # built from the un-cached hash(src, P) edges: the row part keeps
+    # that partitioning (a round plans no 4th Exchange), and with the
+    # row layout the degree aggregates below read the rows Gather caches
+    extras = () if weight is None else ("_w",)
+    gather = Gather(edges, n, adjacency, SRC, DST, extras=extras)
 
     if weight is not None:
         degrees = (
@@ -232,15 +224,7 @@ def _power_iteration(
             if weight is not None
             else F.col("rank") / F.col("out_deg")
         )
-        if use_adj:
-            msgs = packed_msgs(
-                adj, adj_rest, hstate, {"c": contrib_c},
-                src=SRC, dst=DST, vid=VID, src_out="_src",
-            )
-        else:
-            msgs = edges.join(hstate, edges[SRC] == hstate[VID]).select(
-                F.col(SRC).alias("_src"), F.col(DST).alias(VID), contrib_c.alias("c")
-            )
+        msgs = gather.msgs(hstate, {"c": contrib_c}, VID, src_out="_src")
         if hot is not None:
             contribs = salted_sum(
                 msgs, VID, "c", "contrib", hot=hot, salt_n=salt_n, salt_src="_src"
@@ -292,10 +276,7 @@ def _power_iteration(
             idempotent=(tol is not None and sync_every > 1),
         )
     result = final.select(VID, "rank")
-    edges.unpersist()
-    if use_adj:
-        adj.unpersist()
-        adj_rest.unpersist()
+    gather.unpersist()
     if hot is not None:
         hot.unpersist()
     return result

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import DST, SRC, VID, Graph
+from graphscope_spark.skew import Gather
 from graphscope_spark.superstep import StepResult, SuperstepRunner
 
 INF = float("inf")
@@ -89,14 +90,6 @@ def sssp(
             edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST), "w")
         )
     edges = edges.cache()
-    # skew-aware packed (dst, w) adjacency for the relax scatter; min
-    # relaxation is order-independent and dist+w is computed per edge
-    # either way, so distances are bit-identical to the edge-join plan
-    from graphscope_spark.skew import packed_adjacency
-
-    adj, adj_rest = packed_adjacency(edges, SRC, DST, extra=["w"])
-    adj = adj.cache()
-    adj_rest = adj_rest.cache()
 
     # single-task finisher (same contract as wcc): Jacobi min-plus in
     # numpy when the graph fits one task; distributed supersteps are the
@@ -127,6 +120,11 @@ def sssp(
             )
             return out
 
+    # skew-aware packed (dst, w) adjacency for the relax scatter, always:
+    # min relaxation is order-independent and dist+w is computed per
+    # edge, so distances do not depend on the layout
+    gather = Gather(edges, 0, True, SRC, DST, extras=("w",))
+
     def init() -> DataFrame:
         return g.vertices.select(
             VID,
@@ -136,17 +134,7 @@ def sssp(
 
     def step(state: DataFrame, k: int) -> StepResult:
         frontier = state.where(F.col("changed")).select(VID, "dist")
-        scattered = adj.join(frontier, adj[SRC] == frontier[VID]).select(
-            F.explode("_nbrs").alias("_nb"), "dist"
-        ).select(
-            F.col("_nb.d").alias(VID),
-            (F.col("dist") + F.col("_nb.w")).alias("cand"),
-        ).unionByName(
-            adj_rest.join(frontier, adj_rest[SRC] == frontier[VID]).select(
-                F.col(DST).alias(VID),
-                (F.col("dist") + F.col("w")).alias("cand"),
-            )
-        )
+        scattered = gather.msgs(frontier, {"cand": F.col("dist") + F.col("w")}, VID)
         relaxed = scattered.groupBy(VID).agg(F.min("cand").alias("cand"))
         nxt = state.select(VID, "dist").join(relaxed, VID, "left").select(
             VID,
@@ -169,8 +157,7 @@ def sssp(
         idempotent=True,
     )
     edges.unpersist()
-    adj.unpersist()
-    adj_rest.unpersist()
+    gather.unpersist()
     return final.select(VID, "dist")
 
 

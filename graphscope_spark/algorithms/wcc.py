@@ -15,11 +15,15 @@ maps to a broadcast hint on the frontier when it is small — the
 previous round's update count is already on the driver, so the switch
 is free.
 
-One-shuffle superstep (same recipe as pagerank.py): edges cached
-hash(src, P), state kept hash(vid, P), ``shuffle_hash`` hints on the
-state side of both joins, AQE off for the loop — the dense round plans
-exactly one exchange (the min aggregation); sparse rounds replace the
-scatter with a broadcast join, still one exchange.
+Superstep recipe (same as pagerank.py): edges cached hash(src, P)
+through skew.Gather, ``shuffle_hash`` hints on the state side of both
+joins, AQE off for the loop.  What the plan holds (pinned by
+tests/test_plans.py): a dense round after the first plans THREE
+Exchanges and no Sort — the min aggregation, plus the state
+re-exchanged by hash(vid) into the scatter and the apply join, because
+the round barrier rebuilds the state with unknown partitioning; the
+packed gather adds one Generate.  Sparse rounds broadcast the frontier
+into the scatter instead of exchanging it.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphscope_spark.graph import DST, SRC, VID, Graph
+from graphscope_spark.skew import Gather
 from graphscope_spark.superstep import StepResult, SuperstepRunner, one_shuffle_mode
 
 DENSE_FRACTION = 50  # dense when frontier > |V|/50 (flash_utils.h:36)
@@ -178,17 +183,8 @@ def wcc(
     sym = g.symmetrized()
     if g.num_partitions != p:
         sym = sym.repartition(p, SRC)
-    from graphscope_spark.skew import auto_adjacency
-
-    adjacency = auto_adjacency(g.num_vertices(), adjacency)
-    if adjacency:
-        from graphscope_spark.skew import packed_adjacency
-
-        adj, adj_rest = packed_adjacency(sym, SRC, DST)
-        adj = adj.cache()
-        adj_rest = adj_rest.cache()
-    sym = sym.cache()
     n = g.num_vertices()
+    gather = Gather(sym, n, adjacency, SRC, DST)
 
     def init() -> DataFrame:
         return g.vertices.select(
@@ -207,18 +203,7 @@ def wcc(
             # shuffle_hash hint the scatter join re-uses both cached
             # layouts instead of planning a sort-merge with two sorts.
             frontier = frontier.hint("shuffle_hash")
-        if adjacency:
-            scattered = adj.join(frontier, adj[SRC] == frontier[VID]).select(
-                F.explode("_nbrs").alias(VID), "comp"
-            ).unionByName(
-                adj_rest.join(frontier, adj_rest[SRC] == frontier[VID]).select(
-                    F.col(DST).alias(VID), "comp"
-                )
-            )
-        else:
-            scattered = sym.join(frontier, sym[SRC] == frontier[VID]).select(
-                F.col(DST).alias(VID), "comp"
-            )
+        scattered = gather.msgs(frontier, {"comp": F.col("comp")}, VID)
         msgs = scattered.groupBy(VID).agg(F.min("comp").alias("msg"))
         nxt = (
             state.select(VID, "comp")
@@ -241,8 +226,5 @@ def wcc(
     with one_shuffle_mode(spark):
         final = run.run(init, step, max_iterations=max_iter, tol=0.0)
     out = final.select(VID, "comp")
-    sym.unpersist()
-    if adjacency:
-        adj.unpersist()
-        adj_rest.unpersist()
+    gather.unpersist()
     return out

@@ -296,7 +296,9 @@ def single_source_dijkstra_path_length(g: Graph, source: int, weight: str = "wei
 def all_simple_edge_paths(g: Graph, source: int, target: int, cutoff: int = 5) -> list:
     """Each simple path as its edge list (builtin.py
     all_simple_edge_paths analog).  nx convention: ``source == target``
-    yields exactly one empty path."""
+    yields exactly one empty path; a missing endpoint raises
+    NodeNotFound, also when ``source == target``."""
+    _require_nodes(g, source, target)
     if source == target:
         return [[]]
     rows = A.all_simple_paths(g, source=source, target=target, cutoff=cutoff).collect()

@@ -1,4 +1,5 @@
-"""Explicit skew handling: salted two-stage aggregation for hub vertices.
+"""Skew handling: the gather layout and salted two-stage aggregation
+for hub vertices.
 
 The reference has NO skew handling — its loader hash-partitions vertices
 and hopes (arrow_fragment_loader.h:351-390); a Common-Crawl link graph
@@ -6,13 +7,18 @@ is power-law, so a handful of hub urls receive a large share of all
 in-links and the gather step's ``groupBy(dst)`` concentrates their
 messages on single reducers.
 
-Two Spark mechanisms attack this, and we use both:
+Two mechanisms attack this:
 
-1. AQE skew-join splitting (``spark.sql.adaptive.skewJoin.enabled``,
-   set in session.py) — handles the scatter join at runtime.
-2. **Explicit salting (this module)** — for the gather aggregation:
-   messages destined for a *hot* key are first aggregated under
-   ``(key, salt)`` sub-keys (spreading one hub over ``salt_n``
+1. **The gather layout** (:class:`Gather`): above
+   ``ADJ_AUTO_MIN_VERTICES`` the scatter side probes one packed
+   adjacency row per source, and über-degree sources stay row-form so
+   Spark spreads their fan-out over partitions.  AQE's skew-join
+   splitting (enabled in session.py) does NOT help here: every
+   superstep loop inside ``superstep.one_shuffle_mode`` runs with AQE
+   off, so a join's layout is what the plan says.
+2. **Explicit salting** (:func:`salted_sum`) — for the gather
+   aggregation: messages destined for a *hot* key are first aggregated
+   under ``(key, salt)`` sub-keys (spreading one hub over ``salt_n``
    reducers), then re-aggregated by key.  Map-side partial aggregation
    already takes most of the sting out of commutative sums, so this
    matters at the 10^12-edge scale where even the post-combine per-hub
@@ -103,8 +109,8 @@ def packed_adjacency(
     multi-GB array row (single columnar batch, single task), so hub
     fan-out stays row-form where Spark splits it across partitions.
     The hub id set is degree-derived and broadcast-small by power-law
-    construction.  Callers union the two gathers; aggregation semantics
-    are unchanged (same multiset of per-edge messages).
+    construction.  :class:`Gather` unions the two gathers; aggregation
+    semantics are unchanged (same multiset of per-edge messages).
     """
     deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("_d"))
     hubs = deg.where(F.col("_d") > cap).select(src)
@@ -129,57 +135,91 @@ def packed_adjacency(
     return adj, rest
 
 
-def packed_msgs(
-    adj: DataFrame,
-    rest: DataFrame,
-    state: DataFrame,
-    msg_cols: dict[str, "F.Column"],
-    src: str = "src",
-    dst: str = "dst",
-    vid: str = "vid",
-    extras: tuple[str, ...] = (),
-    src_out: str | None = None,
-) -> DataFrame:
-    """The skew-aware gather shared by every superstep algorithm: one
-    message row per edge, message expressions computed from the SOURCE
-    vertex's state columns (+ packed edge ``extras``).
+class Gather:
+    """The one gather every superstep algorithm reads its neighbours
+    through: one message row per edge, message expressions computed
+    from the SOURCE vertex's state columns (+ edge ``extras``).
 
-    ``adj``/``rest`` come from :func:`packed_adjacency` called with the
-    same ``src``/``dst``/``extras``.  The packed side probes |V| rows
-    (state ⋈ one-row-per-source adjacency, then explode); the hub side
-    stays row-form so a 10^8-degree hub spreads across partitions.
-    ``msg_cols``: output-name -> Column over ``state`` columns and
-    ``extras`` (edge attributes).  Output: (``vid`` = gather target,
-    *msg_cols) [+ ``src_out`` = the message's source, for salting].
-    Callers aggregate (groupBy(vid) or salted_sum).
+    The layout is decided once per graph, here: ``adjacency`` resolves
+    through :func:`auto_adjacency` against ``n_vertices``.  Packed, the
+    edges become :func:`packed_adjacency` rows (state ⋈ one row per
+    source, then explode) plus the row-form edges of über-degree hubs;
+    otherwise every edge stays a row.  Both parts are cached here and
+    dropped by :meth:`unpersist`.  Pass ``edges`` un-cached and already
+    hash(``src``, P)-partitioned: the row part keeps that partitioning,
+    so the scatter join plans no exchange on the edge side.
     """
-    st_cols = [c for c in state.columns if c != vid]
 
-    def finish(base: DataFrame) -> DataFrame:
-        return base.select(
-            *([F.col("_g").alias(src_out)] if src_out else []),
-            F.col("_t").alias(vid),
-            *[expr.alias(name) for name, expr in msg_cols.items()],
-        )
+    def __init__(
+        self,
+        edges: DataFrame,
+        n_vertices: int,
+        adjacency: bool | None = None,
+        src: str = "src",
+        dst: str = "dst",
+        extras: tuple[str, ...] = (),
+    ):
+        self.src, self.dst, self.extras = src, dst, tuple(extras)
+        self._adj = None
+        if auto_adjacency(n_vertices, adjacency):
+            adj, edges = packed_adjacency(edges, src, dst, extra=list(self.extras))
+            self._adj = adj.cache()
+        # edge rows the caller already cached for its own one-time
+        # aggregates (lpa_u2i) stay the caller's to unpersist
+        self._own_rows = not edges.is_cached
+        self._rows = edges.cache() if self._own_rows else edges
 
-    j = adj.join(state, adj[src] == state[vid])
-    if extras:
-        j = j.select(
-            adj[src].alias("_g"), F.explode("_nbrs").alias("_nb"), *st_cols
-        ).select(
-            "_g",
-            F.col("_nb.d").alias("_t"),
-            *[F.col(f"_nb.{e}").alias(e) for e in extras],
-            *st_cols,
+    def msgs(
+        self,
+        state: DataFrame,
+        msg_cols: dict[str, "F.Column"],
+        vid: str = "vid",
+        src_out: str | None = None,
+    ) -> DataFrame:
+        """(``vid`` = gather target, *msg_cols) [+ ``src_out`` = the
+        message's source, for salting].  ``msg_cols``: output-name ->
+        Column over ``state`` columns and ``extras``.  Callers aggregate
+        (groupBy(vid) or salted_sum)."""
+        st_cols = [c for c in state.columns if c != vid]
+
+        def finish(base: DataFrame) -> DataFrame:
+            return base.select(
+                *([F.col("_g").alias(src_out)] if src_out else []),
+                F.col("_t").alias(vid),
+                *[expr.alias(name) for name, expr in msg_cols.items()],
+            )
+
+        rows = self._rows
+        out = finish(
+            rows.join(state, rows[self.src] == state[vid]).select(
+                rows[self.src].alias("_g"), rows[self.dst].alias("_t"),
+                *self.extras, *st_cols,
+            )
         )
-    else:
-        j = j.select(
-            adj[src].alias("_g"), F.explode("_nbrs").alias("_t"), *st_cols
-        )
-    hub = rest.join(state, rest[src] == state[vid]).select(
-        rest[src].alias("_g"), rest[dst].alias("_t"), *extras, *st_cols
-    )
-    return finish(j).unionByName(finish(hub))
+        if self._adj is None:
+            return out
+        adj = self._adj
+        j = adj.join(state, adj[self.src] == state[vid])
+        if self.extras:
+            j = j.select(
+                adj[self.src].alias("_g"), F.explode("_nbrs").alias("_nb"), *st_cols
+            ).select(
+                "_g",
+                F.col("_nb.d").alias("_t"),
+                *[F.col(f"_nb.{e}").alias(e) for e in self.extras],
+                *st_cols,
+            )
+        else:
+            j = j.select(
+                adj[self.src].alias("_g"), F.explode("_nbrs").alias("_t"), *st_cols
+            )
+        return finish(j).unionByName(out)
+
+    def unpersist(self) -> None:
+        if self._own_rows:
+            self._rows.unpersist()
+        if self._adj is not None:
+            self._adj.unpersist()
 
 
 # Packed-gather adoption threshold (round-5 A/B, scripts/adj_ab_r5.jsonl
@@ -187,7 +227,7 @@ def packed_msgs(
 # |V|-probe gather beat the edge join ~2x (build amortizes, rest-branch
 # near-empty), but at bench-scale graphs (~16k vertices) the TWO gather
 # branches per round (packed + hub union) add stages to rounds that are
-# stage-overhead-bound, losing 1.3-3.9x.  Algorithms resolve
+# stage-overhead-bound, losing 1.3-3.9x.  Gather resolves
 # ``adjacency=None`` to ``n_vertices >= ADJ_AUTO_MIN_VERTICES`` — the
 # 100TB path gets the packed plan, small interactive graphs keep the
 # single-join plan.

@@ -7,8 +7,12 @@ session" = a burst of fetches from one host with < ``gap`` idle time).
 
 Semantics (deterministic): events are grouped per ``user_id``; a
 session is a maximal run of events where consecutive timestamps are
-within ``gap_seconds``.  Emits one row per CLOSED session
-(session close = watermark passes last_ts + gap, or stream end).
+within ``gap_seconds``.  Emits one row per CLOSED session — closed
+when a later event of the same user arrives more than ``gap_seconds``
+after the session's last one.  The open tail session of each user stays
+in state: the operator sets no timeout, because a processing-time
+timeout makes Spark schedule a no-data batch after every batch, so an
+``availableNow`` query never terminates.
 
 Batch twin: :func:`sessionize_batch` computes identical sessions with
 window functions (lag + cumulative sum of gap-breaks) — the
@@ -86,11 +90,6 @@ def _session_fn(gap_seconds: int):
             last = t
             n += 1
         state.update((start, last, n))
-        # close the session when no events arrive within the timeout
-        state.setTimeoutDuration(gap_seconds * 1000)
-        if state.hasTimedOut:  # pragma: no cover - timer path
-            out.append((user_id, start, last, n))
-            state.remove()
         if not out:
             return iter([])
         pdf = pd.DataFrame(
@@ -107,8 +106,8 @@ def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Streaming sessionization via applyInPandasWithState.
 
     Emits closed sessions only; the open tail session per user stays in
-    state (flushed by processing-time timeout).  Input must be a
-    streaming DataFrame with (user_id, ts).
+    state and is never emitted (no timeout — see the module docstring).
+    Input must be a streaming DataFrame with (user_id, ts).
     """
     return (
         events.select("user_id", "ts")
@@ -118,6 +117,6 @@ def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )

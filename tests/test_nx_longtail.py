@@ -600,10 +600,15 @@ def test_dijkstra_path_no_path_raises(spark):
 
 
 def test_all_simple_edge_paths_source_equals_target(disc_g, disc_nxd):
-    """nx yields one empty path when source == target."""
+    """nx yields one empty path when source == target, and raises
+    NodeNotFound first when that node is missing."""
     want = list(nx.all_simple_edge_paths(disc_nxd, 0, 0))
     got = list(gnx.all_simple_edge_paths(disc_g, 0, 0))
     assert got == want
+    with pytest.raises(nx.NodeNotFound):
+        list(nx.all_simple_edge_paths(disc_nxd, 99, 99))
+    with pytest.raises(gnx.NodeNotFound):
+        gnx.all_simple_edge_paths(disc_g, 99, 99)
 
 
 def test_greedy_color_ignores_selfloops(loop_g, loop_nxd):

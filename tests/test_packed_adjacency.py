@@ -1,6 +1,8 @@
 """Skew-aware packed adjacency (skew.packed_adjacency): hub split
-correctness and gather equivalence across the adjacency/edge-join
-plans for PageRank, WCC, CDLP, SSSP."""
+correctness, and gather equivalence across the two skew.Gather layouts
+(packed adjacency vs edge rows) for every algorithm with an
+``adjacency=`` switch.  SSSP always gathers packed, so it has no second
+layout to compare."""
 
 from __future__ import annotations
 
@@ -70,6 +72,33 @@ def test_wcc_gather_paths_identical(spark, hub_graph):
     b = {r["vid"]: r["comp"] for r in wcc(
         hub_graph, local_finish_rows=0, adjacency=False).collect()}
     assert a == b  # min labels: exactly identical
+
+
+def test_pagerank_weighted_gather_paths_equal(spark, hub_graph):
+    from graphscope_spark.algorithms import pagerank
+
+    e = hub_graph.edges.withColumn(
+        "weight", ((F.col("src") * 7 + F.col("dst")) % 5 + 1).cast("double")
+    )
+    wg = Graph.from_edges(
+        e, hub_graph.vertices, directed=True, num_partitions=4, weight="weight"
+    )
+    a = {r["vid"]: r["rank"] for r in pagerank(
+        wg, tol=None, max_iter=5, weight="weight", adjacency=True).collect()}
+    b = {r["vid"]: r["rank"] for r in pagerank(
+        wg, tol=None, max_iter=5, weight="weight", adjacency=False).collect()}
+    assert set(a) == set(b)
+    assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
+
+
+def test_cdlp_gather_paths_identical(spark, hub_graph):
+    from graphscope_spark.algorithms import cdlp
+
+    a = {r["vid"]: r["label"] for r in cdlp(
+        hub_graph, max_round=5, adjacency=True).collect()}
+    b = {r["vid"]: r["label"] for r in cdlp(
+        hub_graph, max_round=5, adjacency=False).collect()}
+    assert a == b  # label counts are order-independent: exactly identical
 
 
 # -- round 5: packed gather extended to the remaining superstep-heavy

@@ -92,21 +92,11 @@ def two_out_graph(spark):
     return Graph.from_edges(e, directed=True, num_partitions=4)
 
 
-@pytest.mark.parametrize("algo", ["pagerank", "pagerank_adjacency", "ppr"])
-def test_pagerank_round_plan_shape(spark, two_out_graph, monkeypatch, algo):
-    """Rounds after the first (their state comes out of a barrier —
-    columnar after round 0, a checkpoint after round 1) plan the message
-    shuffle plus the state re-exchanged into both joins: at most 3
-    Exchanges, no Sort, and the packed gather's one Generate."""
-    import importlib
-
-    from graphscope_spark.algorithms import pagerank, personalized_pagerank
-
-    runners = []
+def _recording_runner(runners: list):
+    """A SuperstepRunner that records the node names of every round's
+    physical plan."""
 
     class Runner(SuperstepRunner):
-        """Records the node names of every round's physical plan."""
-
         def run(self, init, step, **kw):
             runners.append(self)
             self.plans = []
@@ -118,6 +108,21 @@ def test_pagerank_round_plan_shape(spark, two_out_graph, monkeypatch, algo):
 
             return super().run(init, planned_step, **kw)
 
+    return Runner
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "pagerank_adjacency", "ppr"])
+def test_pagerank_round_plan_shape(spark, two_out_graph, monkeypatch, algo):
+    """Rounds after the first (their state comes out of a barrier —
+    columnar after round 0, a checkpoint after round 1) plan the message
+    shuffle plus the state re-exchanged into both joins: at most 3
+    Exchanges, no Sort, and the packed gather's one Generate."""
+    import importlib
+
+    from graphscope_spark.algorithms import pagerank, personalized_pagerank
+
+    runners = []
+    Runner = _recording_runner(runners)
     kw = dict(tol=None, max_iter=4, sync_every=2)
     if algo == "ppr":
         mod = importlib.import_module("graphscope_spark.algorithms.pagerank")
@@ -134,6 +139,27 @@ def test_pagerank_round_plan_shape(spark, two_out_graph, monkeypatch, algo):
         assert "Sort" not in names and "SortMergeJoin" not in names, (k, names)
         assert names.count("Exchange") <= 3, (k, names)
         assert names.count("Generate") == int(algo == "pagerank_adjacency"), (k, names)
+
+
+@pytest.mark.parametrize("adjacency", [False, True])
+def test_wcc_round_plan_shape(spark, two_out_graph, monkeypatch, adjacency):
+    """Distributed WCC rounds after the first: the min-message shuffle
+    plus the state re-exchanged into the scatter and apply joins — at
+    most 3 Exchanges, no Sort, and one Generate exactly when packed."""
+    import importlib
+
+    from graphscope_spark.algorithms import wcc
+
+    runners = []
+    mod = importlib.import_module("graphscope_spark.algorithms.wcc")
+    monkeypatch.setattr(mod, "SuperstepRunner", _recording_runner(runners))
+    wcc(two_out_graph, local_finish_rows=0, adjacency=adjacency).count()
+    (runner,) = runners
+    assert len(runner.plans) >= 2
+    for k, names in enumerate(runner.plans[1:], start=1):
+        assert "Sort" not in names and "SortMergeJoin" not in names, (k, names)
+        assert names.count("Exchange") <= 3, (k, names)
+        assert names.count("Generate") == int(adjacency), (k, names)
 
 
 def test_boundary_uses_broadcast_join(spark, tiny_graph):

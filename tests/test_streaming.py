@@ -85,7 +85,8 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # availableNow must end once the file is consumed (no timer batches)
+    assert q.awaitTermination(120), q.lastProgress
     got = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
         for r in spark.sql("select * from sessions").collect()
